@@ -3595,9 +3595,10 @@ FROM (
 
 @register("q50_streaming_first_seen", None)
 def q50_streaming_first_seen(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Custom stateful STREAMING operator as a graded row: first-seen dedup
-    via applyInPandasWithState over a bounded multi-file stream (one file
-    per micro-batch, state carried across batches; streaming/stateful.py).
+    """Stateful STREAMING operator as a graded row: first-seen dedup as
+    Spark's streaming min(struct(ts, event_type)) aggregate over a bounded
+    multi-file stream (one file per micro-batch, per-user state carried
+    across batches in the JVM state store; streaming/stateful.py).
     The streamed result equals the batch min per key exactly, so it has a
     full SQL oracle — the streaming==batch methodology made hash-checked."""
     import os

@@ -8,6 +8,8 @@ twin of the batch q25 (tests assert equality via availableNow + memory sink).
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -31,25 +33,37 @@ def windowed_event_aggregation(stream: DataFrame) -> DataFrame:
     )
 
 
-def run_events_stream_available_now(spark: SparkSession, events_dir: str,
-                                    sink_table: str = "stream_agg") -> DataFrame:
-    """Drain the events parquet as a bounded stream (availableNow) into an
-    in-memory sink; returns the final aggregate table."""
+def drain_available_now(spark: SparkSession, events_dir: str,
+                        build: Callable[[DataFrame], DataFrame],
+                        sink_table: str, output_mode: str) -> DataFrame:
+    """Replay ``events_dir`` as a bounded stream, one file per micro-batch,
+    through ``build`` into a memory sink; returns the sink's rows.  The
+    sink's temp view is dropped once the returned frame has resolved it, so
+    repeated calls in one session leave no views behind."""
     stream = (
         spark.readStream.schema(EVENTS_SCHEMA)
         .option("maxFilesPerTrigger", 1)
         .parquet(events_dir)
     )
-    agg = windowed_event_aggregation(stream)
     q = (
-        agg.writeStream.format("memory")
+        build(stream).writeStream.format("memory")
         .queryName(sink_table)
-        .outputMode("complete")
+        .outputMode(output_mode)
         .trigger(availableNow=True)
         .start()
     )
     q.awaitTermination()
-    return spark.table(sink_table)
+    out = spark.table(sink_table)
+    spark.catalog.dropTempView(sink_table)
+    return out
+
+
+def run_events_stream_available_now(spark: SparkSession, events_dir: str,
+                                    sink_table: str = "stream_agg") -> DataFrame:
+    """Drain the events parquet as a bounded stream (availableNow) into an
+    in-memory sink; returns the final aggregate table."""
+    return drain_available_now(spark, events_dir, windowed_event_aggregation,
+                               sink_table, "complete")
 
 
 # ----------------------------------------------------------- late-data drop
@@ -151,20 +165,7 @@ def run_sliding_late_available_now(spark: SparkSession, stage_dir: str,
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "4")
     try:
-        stream = (
-            spark.readStream.schema(EVENTS_SCHEMA)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage_dir)
-        )
-        q = (
-            sliding_late_aggregation(stream)
-            .writeStream.format("memory")
-            .queryName(sink_table)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        return drain_available_now(spark, stage_dir, sliding_late_aggregation,
+                                   sink_table, "append")
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
-    return spark.table(sink_table)

@@ -1,93 +1,42 @@
-"""Custom stateful streaming operator via applyInPandasWithState.
+"""Stateful streaming first-seen on Spark's built-in streaming aggregate.
 
-The engine's example of a stateful op Structured Streaming lacks as a
-built-in: streaming first-seen dedup (exactly-once emission of the first
-event per key, with all later duplicates suppressed across micro-batches).
-State per key is a single seen-flag + first timestamp; timeout is disabled
-(the batch-twin comparison needs total determinism).
+Streaming first-seen dedup: the first event per key, kept exactly across
+micro-batches.  First-seen is a per-key ``min(struct(ts, event_type))``
+(earlier ts wins, ties broken by event_type), so the JVM state store's
+hash aggregate carries it with no Python call per key group.  Should a truly
+custom state op ever be needed, PySpark 4.1 has ``transformWithStateInPandas``.
 
-Batch twin: ``batch_first_seen`` computes the identical result with a
-window/min — tests assert streaming(availableNow) == batch exactly, the same
+Batch twin: ``batch_first_seen`` computes the identical result as a batch
+aggregate — tests assert streaming(availableNow) == batch exactly, the same
 dual-engine methodology as the SQL oracles.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-STATE_SCHEMA = "seen boolean, first_ts timestamp, first_event string"
-OUTPUT_SCHEMA = "user_id long, first_ts timestamp, first_event string"
-
-
-def _dedup_fn(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
-    (user_id,) = key
-    if state.exists:
-        seen, first_ts, first_event = state.get
-    else:
-        seen, first_ts, first_event = False, None, None
-    for pdf in pdfs:
-        if len(pdf) == 0:
-            continue
-        pdf = pdf.sort_values(["ts", "event_type"], kind="mergesort")
-        if not seen:
-            seen = True
-            first_ts = pdf.iloc[0]["ts"]
-            first_event = pdf.iloc[0]["event_type"]
-        else:
-            # deterministic min across batches: earlier ts wins, ties by event
-            cand_ts = pdf.iloc[0]["ts"]
-            cand_ev = pdf.iloc[0]["event_type"]
-            if (cand_ts, cand_ev) < (first_ts, first_event):
-                first_ts, first_event = cand_ts, cand_ev
-    state.update((seen, first_ts, first_event))
-    yield pd.DataFrame({"user_id": [user_id], "first_ts": [first_ts],
-                        "first_event": [first_event]})
-
-
-def streaming_first_seen(events_stream: DataFrame) -> DataFrame:
-    """(user_id, first_ts, first_event) maintained as streaming state."""
-    return (events_stream
-            .select("user_id", "ts", "event_type")
-            .groupBy("user_id")
-            .applyInPandasWithState(
-                _dedup_fn, OUTPUT_SCHEMA, STATE_SCHEMA,
-                outputMode="update",
-                timeoutConf=GroupStateTimeout.NoTimeout))
+from .jobs import drain_available_now
 
 
 def batch_first_seen(events: DataFrame) -> DataFrame:
-    """Batch twin: exact same result as the stateful stream at availableNow."""
+    """(user_id, first_ts, first_event): the per-user min of (ts, event_type)."""
     return events.groupBy("user_id").agg(
         F.min(F.struct("ts", "event_type")).alias("m")
     ).select("user_id", F.col("m.ts").alias("first_ts"),
              F.col("m.event_type").alias("first_event"))
 
 
+def streaming_first_seen(events_stream: DataFrame) -> DataFrame:
+    """The batch twin's aggregate over a stream: Spark keeps each user's
+    running min in its state store across micro-batches."""
+    return batch_first_seen(events_stream)
+
+
 def run_first_seen_available_now(spark, events_dir: str,
                                  sink_table: str = "stream_first_seen"):
     """Drain events as a bounded multi-batch stream (one file per trigger);
-    state carries across micro-batches.  Returns the final per-user rows
-    (last update emitted per key)."""
-    from .jobs import EVENTS_SCHEMA
-
-    stream = (spark.readStream.schema(EVENTS_SCHEMA)
-              .option("maxFilesPerTrigger", 1)
-              .parquet(events_dir))
-    q = (streaming_first_seen(stream)
-         .writeStream.format("memory")
-         .queryName(sink_table)
-         .outputMode("update")
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination()
-    # update mode appends one row per (key, batch); keep each key's last
-    # emission = the min-merged state (first_ts monotonically improves)
-    t = spark.table(sink_table)
-    return batch_first_seen(
-        t.select("user_id", F.col("first_ts").alias("ts"),
-                 F.col("first_event").alias("event_type")))
+    state carries across micro-batches.  Complete mode leaves exactly the
+    final per-user rows in the memory sink."""
+    return drain_available_now(spark, events_dir, streaming_first_seen,
+                               sink_table, "complete")

@@ -4,8 +4,10 @@ harness behind BENCH.md's "sf1 scale rehearsal" section.
 
 Usage: python scripts/sf1_rehearsal.py q58_persona_v1_simplified [qNN ...]
        [--sf-dir /tmp/sf1] [--repeat 2]
+Cores: SPARK_GRAFT_CPUS (default 32), as for session.get_spark.
 """
 import argparse
+import os
 import sys
 import time
 
@@ -26,7 +28,7 @@ def get_spark_with_ui(cores: int, shuffle_partitions: int):
         .appName("sf1-rehearsal")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.driver.memory",
-                __import__("os").environ.get("SPARK_DRIVER_MEM", "24g"))
+                os.environ.get("SPARK_DRIVER_MEM", "24g"))
         .config("spark.ui.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold",
                 str(64 * 1024 * 1024))
@@ -68,7 +70,8 @@ def main() -> int:
     ap.add_argument("--repeat", type=int, default=2)
     args = ap.parse_args()
 
-    spark = get_spark_with_ui(cores=32, shuffle_partitions=64)
+    cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    spark = get_spark_with_ui(cores=cores, shuffle_partitions=2 * cores)
     t0 = time.time()
     n = world.roads_materialized(spark, args.sf_dir).count()
     print(f"world materialized: {n} roads in {time.time()-t0:.1f}s",
@@ -82,7 +85,6 @@ def main() -> int:
             df.write.format("noop").mode("overwrite").save()
             wall = time.time() - t0
             tot1, peak = shuffle_stats(spark)
-            import os
             la = os.getloadavg()
             print(f"{name} run{i}: wall={wall:.1f}s rows_schema={len(df.columns)}c "
                   f"shuffle_delta={(tot1-tot0)/2**30:.2f}GiB "

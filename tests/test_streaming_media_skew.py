@@ -118,7 +118,7 @@ def test_hot_cells_flags_urban_core(spark):
 
 
 def test_stateful_streaming_first_seen_matches_batch(spark, tmp_path):
-    """applyInPandasWithState dedup: multi-batch streaming state == batch twin."""
+    """Streaming first-seen aggregate: multi-batch streaming state == batch twin."""
     import shutil
 
     from osm_processing_pipeline_spark.streaming import stateful
@@ -143,6 +143,99 @@ def test_stateful_streaming_first_seen_matches_batch(spark, tmp_path):
     assert (s["user_id"].values == b["user_id"].values).all()
     assert (s["first_ts"].values == b["first_ts"].values).all()
     assert (s["first_event"].values == b["first_event"].values).all()
+
+
+def _tiny_first_seen_stream(d) -> str:
+    """Three one-file micro-batches in which later batches carry earlier
+    (ts, event_type) minima for keys seen in the first batch."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    t0 = 1_704_067_200_000_000  # 2024-01-01 UTC, in microseconds
+    hour = 3_600_000_000
+    batches = [
+        # (user_id, ts, event_type)
+        [(1, t0 + 10 * hour, "view"), (2, t0 + 8 * hour, "view"),
+         (3, t0 + 8 * hour, "click")],
+        [(1, t0 + 9 * hour, "purchase"), (2, t0 + 8 * hour, "click"),
+         (3, t0 + 9 * hour, "error")],
+        [(1, t0 + 9 * hour, "click"), (3, t0 + 8 * hour, "view"),
+         (4, t0 + 12 * hour, "signup")],
+    ]
+    d.mkdir()
+    for b, rows in enumerate(batches):
+        f = str(d / f"part-{b}.parquet")
+        pq.write_table(pa.table({
+            "event_id": pa.array([10 * b + i for i in range(len(rows))], pa.int64()),
+            "ts": pa.array([r[1] for r in rows], pa.timestamp("us", tz="UTC")),
+            "user_id": pa.array([r[0] for r in rows], pa.int64()),
+            "event_type": pa.array([r[2] for r in rows]),
+            "value": pa.array([1.0] * len(rows)),
+            "props": pa.array(["{}"] * len(rows)),
+        }), f)
+        os.utime(f, (1_000_000 + b, 1_000_000 + b))  # file order = batch order
+    return str(d)
+
+
+def test_first_seen_state_merges_across_batches(spark, tmp_path):
+    """A later micro-batch lowers a key's first-seen ts (user 1), a ts tie
+    across batches is broken by event_type (users 1, 2, 3), and a key can
+    first appear in the last batch (user 4); streaming == batch twin."""
+    from osm_processing_pipeline_spark.streaming import stateful
+    d = _tiny_first_seen_stream(tmp_path / "events_tiny")
+
+    def rows(df):
+        return sorted(df.select("user_id", F.unix_micros("first_ts"), "first_event")
+                      .collect())
+
+    streamed = rows(stateful.run_first_seen_available_now(spark, d, "t_tiny_first_seen"))
+    batch = rows(stateful.batch_first_seen(spark.read.parquet(d)))
+    t0, hour = 1_704_067_200_000_000, 3_600_000_000
+    assert streamed == batch
+    assert [tuple(r) for r in streamed] == [
+        (1, t0 + 9 * hour, "click"), (2, t0 + 8 * hour, "click"),
+        (3, t0 + 8 * hour, "click"), (4, t0 + 12 * hour, "signup")]
+
+
+def test_first_seen_state_is_jvm_aggregate(spark, tmp_path, capsys):
+    """Plan-shape guard: first-seen state lives in Spark's streaming hash
+    aggregate (stateStoreSave), not in a Python per-key-group operator."""
+    from osm_processing_pipeline_spark.streaming import stateful
+    d = _tiny_first_seen_stream(tmp_path / "events_tiny")
+    stream = (spark.readStream.schema(SJ.EVENTS_SCHEMA)
+              .option("maxFilesPerTrigger", 1).parquet(d))
+    # update mode works for any stateful operator, so a Python state op
+    # fails the assertions below instead of failing to start
+    q = (stateful.streaming_first_seen(stream).writeStream.format("memory")
+         .queryName("t_first_seen_plan").outputMode("update")
+         .trigger(availableNow=True).start())
+    try:
+        q.awaitTermination()
+        capsys.readouterr()
+        q.explain(extended=True)
+        plan = capsys.readouterr().out
+        batches = [p for p in q.recentProgress if p["numInputRows"] > 0]
+        ops = [op["operatorName"] for op in q.lastProgress["stateOperators"]]
+    finally:
+        spark.catalog.dropTempView("t_first_seen_plan")
+    assert len(batches) == 3
+    assert ops == ["stateStoreSave"]
+    assert "StateStoreSave" in plan
+    assert "FlatMapGroupsInPandasWithState" not in plan
+
+
+def test_streaming_queries_release_memory_sinks(spark):
+    """Repeated q50/q54 calls leave no memory-sink temp views in the session,
+    and each returned frame stays readable after its view is dropped."""
+    from osm_processing_pipeline_spark import registry
+    for name in ("q50_streaming_first_seen", "q54_streaming_late_windows"):
+        first, second = (registry.QUERIES[name](spark, SF_SMOKE) for _ in range(2))
+        assert first.count() == second.count() > 0
+    leaked = [t.name for t in spark.catalog.listTables()
+              if t.name.startswith(("q50_sink", "q54_sink"))]
+    assert leaked == []
 
 
 def test_late_window_stream_drops_and_withholds(spark, tmp_path):
