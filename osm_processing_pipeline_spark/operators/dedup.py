@@ -74,6 +74,11 @@ def jaccard_pairs(sets: DataFrame, key: str = "shingle",
                   carry: tuple[str, ...] = ()) -> DataFrame:
     """Exact Jaccard over (doc_id, key) set rows.
 
+    Precondition: ``sets`` has distinct (doc_id, key) rows.  Neither mode
+    deduplicates: a repeated row counts twice in the set sizes (and in
+    ``inter_cnt`` for the self-join), so ``union_cnt`` and
+    ``jaccard_permille`` would be wrong without any error.
+
     Without ``pairs``: all pairs sharing >= 1 key via a key self-join — the
     caller must bound key fan-out first (``df_filter``), or hot keys go
     quadratic.  With ``pairs`` (distinct (doc_a, doc_b), doc_a < doc_b): the
@@ -131,14 +136,6 @@ def jaccard_pairs(sets: DataFrame, key: str = "shingle",
             .join(ta, "doc_a").join(tb, "doc_b")
             .withColumn("inter_cnt",
                         F.size(F.array_intersect("ta", "tb")).cast("long"))
-            # the nondeterministic barrier column keeps the >= 1 filter OUT
-            # of the join condition: pushed, it re-evaluates array_intersect
-            # per pair in the join (once in the condition, again in the
-            # project) — as a standalone Filter it runs once in whole-stage
-            # codegen (A/B at sf0.1, alternating: 22.6 -> 17.7 s; the q55
-            # folded-condition lesson, cheap-predicate edition).  `_mid` is
-            # dropped by the final select and never shuffled.
-            .withColumn("_mid", F.monotonically_increasing_id())
             .filter(F.col("inter_cnt") >= 1)
             .withColumn("union_cnt",
                         (F.size("ta") + F.size("tb")).cast("long")

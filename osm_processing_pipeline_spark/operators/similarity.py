@@ -221,7 +221,6 @@ def embedding_neardup(embeddings: DataFrame, threshold_nano: int) -> DataFrame:
 
 
 IVF_LISTS = 16
-IVF_NPROBE = 2
 IVF_KMEANS_ITERS = 2   # fixed-count Lloyd: both engines run the identical
                        # iteration sequence, so the trained centroids twin
 

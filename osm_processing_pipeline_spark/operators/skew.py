@@ -1,8 +1,8 @@
 """Explicit skew handling: salting + range repartitioning.
 
 The dense-urban-cell skew is structural in OSM-like data (the synthetic world
-plants ~40% of roads in 0.4% of cells to reproduce it).  Two mitigations the
-engine applies on top of AQE:
+plants ~40% of roads in 0.4% of cells to reproduce it).  Two mitigations on
+top of AQE (tests exercise them; no registered query calls them):
 
   * ``salted_distinct_count`` — COUNT(DISTINCT x) per hot key: the distinct
     expansion cannot partial-aggregate, so one reducer receives the whole hot

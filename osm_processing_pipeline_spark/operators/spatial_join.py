@@ -76,37 +76,6 @@ def point_in_polygon_join(pts: DataFrame, polys: DataFrame,
                .drop("_cell")
 
 
-def distance_join_segments_points(segs: DataFrame, feature_pts: DataFrame,
-                                  radius_deg: float,
-                                  fx: str = "cx", fy: str = "cy") -> DataFrame:
-    """ST_DWithin(road segment, point feature, d): segment cells x feature
-    disk cover equi-join, exact clamped-projection d^2 refine
-    (sql/road_scenery/04_scenery_hill.sql:7-26 semantics)."""
-    scov = segs.withColumn(
-        "_cell", F.explode(cells.segment_cover(F.col("ax"), F.col("ay"),
-                                               F.col("bx"), F.col("by"))))
-    fcov = feature_pts.withColumn(
-        "_cell", F.explode(cells.disk_cover_of_point(F.col(fx), F.col(fy), radius_deg)))
-    cand = scov.join(fcov, "_cell")
-    d2 = G.seg_point_dist2_deg(F.col("ax"), F.col("ay"), F.col("bx"), F.col("by"),
-                               F.col(fx), F.col(fy))
-    return cand.filter(d2 <= F.lit(radius_deg) * F.lit(radius_deg)).drop("_cell")
-
-
-def distance_join_points(pts: DataFrame, feature_pts: DataFrame,
-                         radius_deg: float,
-                         px: str = "lon", py: str = "lat",
-                         fx: str = "cx", fy: str = "cy") -> DataFrame:
-    """ST_DWithin(point, feature_point, d) via k-ring expansion + exact d^2
-    compare (no sqrt).  Ring radius ceil(d/cell) guarantees completeness."""
-    p = pts.withColumn("_cell", cells.cell_of_point(F.col(px), F.col(py)))
-    fcov = feature_pts.withColumn(
-        "_cell", F.explode(cells.disk_cover_of_point(F.col(fx), F.col(fy), radius_deg)))
-    cand = p.join(fcov, "_cell")
-    d2 = G.point_dist2_deg(F.col(px), F.col(py), F.col(fx), F.col(fy))
-    return cand.filter(d2 <= F.lit(radius_deg) * F.lit(radius_deg)).drop("_cell")
-
-
 def road_cells(segs: DataFrame) -> DataFrame:
     """Exact distinct (osm_id, _cell) road-presence pairs.  Cell bounds are
     computed arithmetically from the cell id — no grid join needed."""

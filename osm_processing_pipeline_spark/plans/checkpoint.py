@@ -8,10 +8,11 @@ Here that contract is explicit and queryable: a stage's output is written one
 
     {stage, range_id, lo, hi, output_rows, wall_s, lineage, finished_at_ns}
 
-written atomically (tmp + rename).  On restart, ranges whose manifest record
-exists with a matching lineage hash are skipped — the exact analogue of the
-reference's committed chunks, but with lineage so a changed input or changed
-stage version invalidates stale checkpoints instead of silently reusing them.
+written atomically (tmp + rename).  On restart, ranges whose live (last)
+manifest record has a matching stage, lineage hash and bounds are skipped —
+the exact analogue of the reference's committed chunks, but with lineage so a
+changed input, stage version or range layout invalidates stale checkpoints
+instead of silently reusing them.
 
 At cluster scale the ranges ARE the Iceberg partitions (partition-by-cell
 overwrite); locally they are parquet subdirectories.  Determinism of every
@@ -54,6 +55,13 @@ def _append_manifest(out_dir: str, rec: dict) -> None:
     os.replace(tmp, p)
 
 
+def live_records(out_dir: str) -> dict[int, dict]:
+    """range_id -> the LAST manifest record written for that range.  range=N
+    directories are shared by every stage, lineage and layout written to
+    ``out_dir``, so only the last record describes what range=N holds."""
+    return {r["range_id"]: r for r in read_manifest(out_dir)}
+
+
 def lineage_hash(stage: str, inputs: list[str], version: str = "1") -> str:
     h = hashlib.sha256()
     h.update(stage.encode())
@@ -79,13 +87,24 @@ def run_stage(spark: SparkSession,
               lineage: str) -> dict:
     """Execute a stage range-by-range with skip-on-resume.
 
+    A range is skipped when its live record (``live_records``) has this
+    stage, lineage and (lo, hi) and its directory is complete.  A live record
+    with this stage and lineage but other bounds is a layout change the
+    lineage does not capture: resuming would mix two layouts, so it raises
+    ValueError.
+
     Returns {"computed": [...], "skipped": [...], "rows": total}.
     """
     os.makedirs(out_dir, exist_ok=True)
-    done = {
-        (r["range_id"]): r for r in read_manifest(out_dir)
-        if r["stage"] == stage and r["lineage"] == lineage
-    }
+    done = {rid: r for rid, r in live_records(out_dir).items()
+            if r["stage"] == stage and r["lineage"] == lineage}
+    for rid, (lo, hi) in enumerate(ranges):
+        if rid in done and (done[rid]["lo"], done[rid]["hi"]) != (lo, hi):
+            raise ValueError(
+                f"{out_dir} range={rid} holds [{done[rid]['lo']}, "
+                f"{done[rid]['hi']}) of stage {stage!r} under lineage "
+                f"{lineage}, asked for [{lo}, {hi}); put the range layout "
+                "into the lineage")
     computed, skipped = [], []
     total = 0
     df = df_fn()
@@ -118,18 +137,18 @@ def load_stage(spark: SparkSession, out_dir: str,
                stage: str | None = None, lineage: str | None = None) -> DataFrame:
     """Read a stage's output back from the checkpoint store.
 
-    Reads ONLY the range directories recorded in the manifest for the given
-    stage/lineage — a shrunk range layout under a new lineage leaves stale
-    range=N directories on disk, and a bare glob would silently read them
-    back alongside fresh output.  Falls back to the glob only when no
-    manifest records match (legacy stores)."""
-    recs = read_manifest(out_dir)
+    Reads ONLY the range directories whose live record (``live_records``)
+    matches the given stage/lineage — a shrunk range layout under a new
+    lineage leaves stale range=N directories on disk, and a bare glob would
+    silently read them back alongside fresh output.  Falls back to the glob
+    only when no live records match (legacy stores)."""
+    recs = list(live_records(out_dir).values())
     if stage is not None:
         recs = [r for r in recs if r["stage"] == stage]
     if lineage is not None:
         recs = [r for r in recs if r["lineage"] == lineage]
     if not recs:
         return spark.read.parquet(os.path.join(out_dir, "range=*"))
-    rids = sorted({r["range_id"] for r in recs})
+    rids = sorted(r["range_id"] for r in recs)
     return spark.read.parquet(
         *[os.path.join(out_dir, f"range={rid}") for rid in rids])

@@ -12,7 +12,8 @@ import os
 from pyspark.sql import SparkSession
 
 RUNTIME_CONFS = {
-    # AQE: runtime coalesce + skew-join mitigation on top of our explicit salting
+    # AQE: runtime coalesce + skew-join mitigation (no registered query salts
+    # explicitly; operators/skew is exercised by tests only)
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",

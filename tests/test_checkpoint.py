@@ -3,6 +3,7 @@ lineage invalidates them; resumed output is bit-identical."""
 
 import shutil
 
+import pytest
 from pyspark.sql import functions as F
 
 from osm_processing_pipeline_spark.datagen import world
@@ -90,3 +91,40 @@ def test_load_stage_ignores_stale_ranges_of_shrunk_layout(spark):
     # the bare glob (legacy) would have over-read — prove the stale dirs exist
     assert CP.load_stage(spark, OUT).count() > got.count()
     shutil.rmtree(OUT, ignore_errors=True)
+
+
+def test_job_resume_across_range_layouts(spark, capsys):
+    """job.py --checkpointed re-run on one out-dir with 8, then 4, then 16
+    ranges: each run must report, and load back, exactly the rows of the
+    stage, never a mix of two layouts' range=N directories."""
+    from osm_processing_pipeline_spark import job
+
+    shutil.rmtree(OUT, ignore_errors=True)
+    want = _pieces_fn(spark)().count()
+    for n in (8, 4, 16):
+        assert job.main(["--checkpointed", "--sf-dir", SF_SMOKE,
+                         "--out-dir", OUT, "--ranges", str(n)]) == 0
+        assert f" rows={want}" in capsys.readouterr().err, n
+        lin = CP.read_manifest(OUT)[-1]["lineage"]  # the run's own lineage
+        assert CP.load_stage(spark, OUT, "pieces", lin).count() == want, n
+    shutil.rmtree(OUT, ignore_errors=True)
+
+
+def test_run_stage_refuses_layout_change_under_one_lineage(spark, tmp_path):
+    """Same stage and lineage, other range bounds: resuming would mix two
+    layouts, so run_stage raises before writing anything."""
+    out = str(tmp_path / "ckpt")
+    keys = lambda: spark.range(100).withColumnRenamed("id", "k")  # noqa: E731
+    lin = CP.lineage_hash("keys", ["t"])
+    CP.run_stage(spark, "keys", keys, "k", CP.make_ranges(0, 100, 8), out, lin)
+    for n in (4, 16):
+        with pytest.raises(ValueError, match="range layout"):
+            CP.run_stage(spark, "keys", keys, "k", CP.make_ranges(0, 100, n),
+                         out, lin)
+    assert len(CP.read_manifest(out)) == 8
+    # with the layout in the lineage the new layout computes cleanly
+    lin4 = CP.lineage_hash("keys", ["t", "4"])
+    r = CP.run_stage(spark, "keys", keys, "k", CP.make_ranges(0, 100, 4),
+                     out, lin4)
+    assert r["computed"] == [0, 1, 2, 3] and r["rows"] == 100
+    assert CP.load_stage(spark, out, "keys", lin4).count() == 100
